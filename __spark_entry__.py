@@ -8079,24 +8079,22 @@ def _semdedup_sql() -> str:
     from the gate corpus parquet itself (ADVICE r4: a pinned n=500 silently
     desynchronizes if the gate corpus is ever regenerated at another size;
     scripts/check_oracle.py points SPARK_GRAFT_ORACLE_SF at the sf_dir under
-    test, the driver's gate runs at the default sf0.01); the within-cell
-    pairwise stage mirrors the Spark self-join with the same round-4 cosine
-    threshold device already proven by embedding_near_dups; keep = no
-    duplicate partner of smaller id."""
+    test, the default is sf0.01; a missing or unreadable parquet raises
+    instead of guessing n); the within-cell pairwise stage mirrors the Spark
+    self-join with the same round-4 cosine threshold device already proven
+    by embedding_near_dups; keep = no duplicate partner of smaller id."""
+    import duckdb as _dd
+
     from kaminpar_spark.functions.similarity import semdedup_auto_k
 
-    n = 500  # gate-corpus fallback if the parquet is unreadable here
+    _f = os.path.join(
+        os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"),
+        "embeddings.parquet",
+    )
     try:
-        import duckdb as _dd
-
-        _f = os.path.join(
-            os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"),
-            "embeddings.parquet",
-        )
-        if os.path.exists(_f):
-            n = _dd.sql(f"SELECT count(*) FROM read_parquet('{_f}')").fetchone()[0]
-    except Exception:
-        pass
+        n = _dd.sql(f"SELECT count(*) FROM read_parquet('{_f}')").fetchone()[0]
+    except (OSError, _dd.Error) as e:
+        raise RuntimeError(f"semdedup oracle: cannot count rows of {_f}: {e}") from e
 
     return f"""
 WITH cells AS MATERIALIZED ({_kmeans_sql(k=semdedup_auto_k(n))}),

@@ -92,13 +92,9 @@ def main():
     queries["etl_edge_table"] = round(time.time() - t0, 3)
     _phase("etl done")
 
-    # ---- PageRank (fixed supersteps for a stable throughput metric; blocks
-    # of 5 chained supersteps amortize fixed planning/launch overhead) ----
-    # NOTE: steps_per_block chaining is a trap here — a superstep references
-    # its input state 2-3 times (gather + argmax + final join), so chaining k
-    # steps without materialization recomputes the subtree ~3^k times
-    # (measured: a 4-chained LPA block took 211 s vs 4 x 2 s materialized).
-    # One localCheckpoint per superstep is the right granularity.
+    # ---- PageRank (fixed supersteps for a stable throughput metric) ----
+    # Materialized once per superstep: a step reads its input 2-3 times, so
+    # chaining unmaterialized steps recomputes ~3^k subtrees.
     t0 = time.time()
     pagerank(gp, tol=0.0, max_iters=pr_iters).count()
     pr_sec = time.time() - t0

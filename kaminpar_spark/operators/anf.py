@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from kaminpar_spark.functions.hashing import POLY_MOD
 from kaminpar_spark.graph import GraphFrame
 from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.superstep import iterate
 
 # Per-stream affine mixers (primes, same family as operators.walks): each
 # term < 2^45, ANSI-safe in int64 without intermediate pmod.
@@ -86,24 +87,19 @@ def anf_masks(
     """Masks after ``rounds`` OR-supersteps (deterministic unrolled form —
     mirrors the oracle; state is truncated per round so planning stays flat).
 
-    ``runner`` (plans.superstep.SuperstepRunner) makes every superstep a
-    durable snapshot with a changed-mask convergence metric, resumable
-    mid-iteration. Early exit at changed == 0 is parity-safe: a fixpoint
-    mask set is invariant under further OR-rounds, so the bounded oracle
-    sees identical values."""
+    Every superstep reports a changed-mask metric; ``runner``
+    (plans.superstep.SuperstepRunner) makes every superstep a durable
+    snapshot, resumable mid-iteration. Early exit at changed == 0 is
+    parity-safe: a fixpoint mask set is invariant under further OR-rounds,
+    so the bounded oracle sees identical values."""
     cols = _mask_cols(streams)
 
     def step(s: DataFrame, i: int) -> DataFrame:
         cur = s.select("id", *cols)
-        new = anf_round(graph, cur, streams)
-        if runner is None:
-            return new
         prev = cur.select("id", *[F.col(c).alias(f"p{c}") for c in cols])
-        return new.join(prev.hint("shuffle_hash"), "id")
+        return anf_round(graph, cur, streams).join(prev.hint("shuffle_hash"), "id")
 
     def metrics(new: DataFrame) -> dict:
-        if runner is None:
-            return {}
         changed = None
         for c in cols:
             t = (F.col(c) != F.col(f"p{c}")).cast("int")
@@ -111,16 +107,8 @@ def anf_masks(
         ch = new.agg(F.sum(changed).alias("ch")).first()["ch"]
         return {"changed": int(ch or 0)}
 
-    def converged(m: dict) -> bool:
-        return runner is not None and m.get("changed") == 0
-
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     init = init_masks(graph.nodes, streams)
-    if runner is not None:
-        final = runner.run(name, init, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(init, step, metrics, converged, rounds)
+    final = iterate(name, init, step, rounds, metrics, lambda m: m["changed"] == 0, runner)
     return final.select("id", *cols)
 
 
@@ -181,20 +169,18 @@ def neighborhood_function(
     """Global N(t) = sum over nodes of estimated |ball(v, t)| for t=0..max_t —
     the classic ANF curve (effective-diameter readout). Driver-side list of
     (t, estimate); one agg per t over the running mask state."""
-    state = truncate(init_masks(graph.nodes, streams))
-    out: list[tuple[int, float]] = []
-
     def read(s: DataFrame) -> float:
         ranks = anf_ranks(s, streams)
         est = F.pow(F.lit(2.0), F.col("r_sum") / F.lit(float(streams))) / F.lit(PHI)
         return float(ranks.agg(F.sum(est).alias("nf")).first()["nf"])
 
-    out.append((0, read(state)))
-    for t in range(1, max_t + 1):
-        new = truncate(anf_round(graph, state, streams))
-        release(state)
-        state = new
-        out.append((t, read(state)))
+    init = init_masks(graph.nodes, streams)
+    out = [(0, read(init))]
+    release(iterate(
+        "neighborhood_function", init, lambda s, i: anf_round(graph, s, streams), max_t,
+        lambda s: {"nf": read(s)},
+        on_metrics=lambda i, m: out.append((i + 1, m["nf"])),
+    ))
     return out
 
 

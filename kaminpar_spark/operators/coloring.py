@@ -88,20 +88,20 @@ def jp_round(graph: GraphFrame, state: DataFrame) -> DataFrame:
     )
 
 
+def _jp_init(graph: GraphFrame) -> DataFrame:
+    return graph.nodes.select(
+        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
+    )
+
+
 def jp_color(graph: GraphFrame, rounds: int = 6) -> DataFrame:
     """(id, color) after exactly ``rounds`` Jones-Plassmann supersteps —
     color is NULL for nodes not yet scheduled (the hop-bounded contract of
     bfs_dist4: well-defined and oracle-checkable round by round)."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    from kaminpar_spark.plans.superstep import iterate
 
-    state = graph.nodes.select(
-        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
-    )
-    for _ in range(rounds):
-        new_state = truncate(jp_round(graph, state))
-        release(state)
-        state = new_state
-    return state.select("id", "color")
+    final = iterate("jp_color", _jp_init(graph), lambda s, i: jp_round(graph, s), rounds)
+    return final.select("id", "color")
 
 
 def luby_mis_round(graph: GraphFrame, state: DataFrame) -> DataFrame:
@@ -153,16 +153,13 @@ def luby_mis(graph: GraphFrame, rounds: int = 6) -> DataFrame:
     maximal independent set). Deterministic: same hash priorities as
     jp_color. Unlike a clique-bound coloring, Luby halves the undecided set
     per round in expectation on ANY graph."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    from kaminpar_spark.plans.superstep import iterate
 
     state = graph.nodes.select(
         "id", color_priority(F.col("id")).alias("pri"), F.lit(0).cast("int").alias("st")
     )
-    for _ in range(rounds):
-        new_state = truncate(luby_mis_round(graph, state))
-        release(state)
-        state = new_state
-    return state.select("id", "st")
+    final = iterate("luby_mis", state, lambda s, i: luby_mis_round(graph, s), rounds)
+    return final.select("id", "st")
 
 
 def color_to_completion(graph: GraphFrame, max_rounds: int = 100) -> DataFrame:
@@ -170,15 +167,11 @@ def color_to_completion(graph: GraphFrame, max_rounds: int = 100) -> DataFrame:
     ``max_rounds``; a warning row is impossible — JP colors >= 1 node per
     round, so max_rounds bounds the worst case, and the caller can assert
     no NULLs remain)."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    from kaminpar_spark.plans.superstep import iterate
 
-    state = graph.nodes.select(
-        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
+    final = iterate(
+        "color_to_completion", _jp_init(graph), lambda s, i: jp_round(graph, s), max_rounds,
+        lambda s: {"any_uncolored": s.where(F.col("color").isNull()).limit(1).count()},
+        lambda m: m["any_uncolored"] == 0,
     )
-    for _ in range(max_rounds):
-        new_state = truncate(jp_round(graph, state))
-        release(state)
-        state = new_state
-        if state.where(F.col("color").isNull()).limit(1).count() == 0:
-            break
-    return state.select("id", "color")
+    return final.select("id", "color")

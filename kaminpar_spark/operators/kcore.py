@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from kaminpar_spark.graph import GraphFrame
 from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.superstep import iterate
 
 
 def k_core_members(
@@ -173,20 +174,18 @@ def core_numbers(
     h-index fixpoint (module docstring). ``rounds=N`` runs exactly N
     supersteps with no convergence probes (deterministic unrolled form for
     oracle parity); default iterates to fixpoint (values stop changing)."""
-    state = truncate(graph.degrees().select("id", F.col("degree").alias("c")))
-    n_rounds = rounds if rounds is not None else max_rounds
-    converged = rounds is not None
-    for _ in range(n_rounds):
-        new = truncate(hindex_round(graph, state))
-        release(state)
-        if rounds is None:
-            changed = new.agg(F.sum("changed")).first()[0] or 0
-            if changed == 0:
-                state = new
-                converged = True
-                break
-        state = new
-    if not converged:
+    fixpoint = rounds is None
+    history: list[dict] = []
+    final = iterate(
+        "core_numbers",
+        graph.degrees().select("id", F.col("degree").alias("c")),
+        lambda s, i: hindex_round(graph, s),
+        max_rounds if fixpoint else rounds,
+        (lambda s: {"changed": s.agg(F.sum("changed")).first()[0] or 0}) if fixpoint else None,
+        lambda m: m["changed"] == 0,
+        on_metrics=lambda i, m: history.append(m),
+    )
+    if fixpoint and (not history or history[-1]["changed"] != 0):
         import logging
 
         logging.getLogger(__name__).warning(
@@ -194,4 +193,4 @@ def core_numbers(
             "— returned values upper-bound the true core numbers",
             max_rounds,
         )
-    return state.select("id", F.col("c").alias("core"))
+    return final.select("id", F.col("c").alias("core"))

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import truncate
 
 
 def label_scores(graph: GraphFrame, state: DataFrame) -> DataFrame:
@@ -251,7 +251,6 @@ def label_propagation(
     min_moved_frac: float = 0.0,
     on_metrics=None,
     name: str = "labelprop",
-    steps_per_block: int = 1,
     track_convergence: bool = True,
 ) -> DataFrame:
     """Run LP from singleton labels to (near-)convergence. Returns (id, label).
@@ -259,31 +258,23 @@ def label_propagation(
     Stops when moved == 0, or moved/n <= min_moved_frac (the reference's
     early-stop analog, parallel_label_propagation_coarsener.h:141-143).
     """
-    from kaminpar_spark.plans.superstep import run_in_memory
+    from kaminpar_spark.plans.superstep import iterate
 
     n = graph.num_nodes()
     state = graph.nodes.select(
         "id", F.col("id").alias("label"), "weight", F.lit(0).alias("moved")
     )
 
-    if max_cluster_weight is not None:
-        steps_per_block = 1  # capped config truncates internally per step
-
     def step(s: DataFrame, i: int) -> DataFrame:
-        cur = s
-        for j in range(steps_per_block):
-            cur = lp_step(
-                graph,
-                cur,
-                step_idx=i * steps_per_block + j,
-                max_cluster_weight=max_cluster_weight,
-                semi_sync=semi_sync,
-            )
-        return cur
+        return lp_step(
+            graph,
+            s,
+            step_idx=i,
+            max_cluster_weight=max_cluster_weight,
+            semi_sync=semi_sync,
+        )
 
     def metrics(new: DataFrame) -> dict:
-        if not track_convergence:
-            return {"moved": -1}
         moved = new.agg(F.sum("moved")).first()[0] or 0
         return {"moved": int(moved)}
 
@@ -293,19 +284,16 @@ def label_propagation(
     history: list[int] = []
 
     def converged(m: dict) -> bool:
-        if not track_convergence:
-            return False
         history.append(m["moved"])
         quiet = m["moved"] <= min_moved_frac * n
         if not semi_sync:
             return quiet
         return quiet and len(history) >= 2 and history[-2] <= min_moved_frac * n
 
-    n_blocks = -(-max_iters // steps_per_block)
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, n_blocks)
-    else:
-        final = run_in_memory(state, step, metrics, converged, n_blocks, on_metrics)
+    final = iterate(
+        name, state, step, max_iters, metrics if track_convergence else None,
+        converged, runner, on_metrics,
+    )
     return final.select("id", "label")
 
 
@@ -326,16 +314,17 @@ def seeded_label_propagation(
     labeled state + one (dst, label) hash aggregate + one struct-max
     aggregate per dst (bounded by the number of DISTINCT labels — a class
     count, not a degree) + one hinted n-scale join."""
-    from kaminpar_spark.plans.lineage import truncate
+    from kaminpar_spark.plans.superstep import iterate
 
     sd = seeds.select("id", F.col("label").cast("long").alias("seed_label"))
-    state = truncate(
+    state = (
         graph.nodes.select("id")
         .join(sd.hint("shuffle_hash"), "id", "left")
         .select("id", F.col("seed_label"), F.col("seed_label").alias("label"))
     )
-    for _ in range(rounds):
-        labeled = state.where(F.col("label").isNotNull()).select("id", "label")
+
+    def step(s: DataFrame, i: int) -> DataFrame:
+        labeled = s.where(F.col("label").isNotNull()).select("id", "label")
         gathered = graph.gather(labeled, ["label"])
         votes = (
             gathered.groupBy(F.col("dst").alias("id"), "label")
@@ -346,8 +335,8 @@ def seeded_label_propagation(
             .agg(F.max(F.struct(F.col("w"), (-F.col("label")).alias("nl"))).alias("b"))
             .select("id", (-F.col("b.nl")).alias("new_label"))
         )
-        new_state = truncate(
-            state.select("id", "seed_label", F.col("label").alias("old_label"))
+        return (
+            s.select("id", "seed_label", F.col("label").alias("old_label"))
             .join(best.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -357,6 +346,6 @@ def seeded_label_propagation(
                 ).alias("label"),
             )
         )
-        release(state)
-        state = new_state
-    return state.select("id", "label")
+
+    final = iterate("seeded_label_propagation", state, step, rounds)
+    return final.select("id", "label")

@@ -146,17 +146,12 @@ def louvain_level(
         ).first()["mv"]
         return {"moved": int(moved or 0)}
 
-    # fixed step count: a zero-move parity step does not imply the OTHER
-    # parity is stable, so the loop never early-exits (oracle lockstep)
-    def converged(m: dict) -> bool:
-        return False
+    from kaminpar_spark.plans.superstep import iterate
 
-    from kaminpar_spark.plans.superstep import run_in_memory
-
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, rounds * 2)
-    else:
-        final = run_in_memory(state, step, metrics, converged, rounds * 2)
+    # fixed step count (no ``converged``): a zero-move parity step does not
+    # imply the OTHER parity is stable, so the loop never early-exits
+    # (oracle lockstep)
+    final = iterate(name, state, step, rounds * 2, metrics, runner=runner)
     return final.select("id", "comm")
 
 

@@ -107,19 +107,11 @@ def pagerank(
     weighted: bool = False,
     runner=None,
     on_metrics=None,
-    steps_per_block: int = 1,
     warm_start: DataFrame | None = None,
 ) -> DataFrame:
     """Run to convergence; returns (id, rank). With a SuperstepRunner the loop
-    is durable + resumable; otherwise in-memory with truncated lineage.
-
-    ``steps_per_block`` chains that many supersteps into ONE materialized
-    plan — the fixed per-superstep driver cost (planning + job launch,
-    ~0.3-1 s) is paid once per block instead of once per step. Convergence is
-    then checked at block granularity. Requires no dangling nodes (their mass
-    aggregate needs a materialization per step); falls back to 1 otherwise.
-    """
-    from kaminpar_spark.plans.superstep import run_in_memory
+    is durable + resumable; otherwise in-memory with truncated lineage."""
+    from kaminpar_spark.plans.superstep import iterate
 
     n = graph.num_nodes()
     state = init_ranks(graph, n, weighted=weighted, warm_start=warm_start)
@@ -128,41 +120,26 @@ def pagerank(
     has_dangling = (
         state.where(F.col("out_norm") == 0.0).limit(1).count() > 0
     )
-    if has_dangling:
-        steps_per_block = 1
 
     def step(s: DataFrame, i: int) -> DataFrame:
-        cur = s
-        for _ in range(steps_per_block):
-            cur = pagerank_step(
-                graph, cur, n, damping, weighted,
-                dangling_mass=None if has_dangling else 0.0,
-            )
-        return cur
+        return pagerank_step(
+            graph, s, n, damping, weighted,
+            dangling_mass=None if has_dangling else 0.0,
+        )
 
-    if tol <= 0.0:
-        # fixed-iteration mode: no convergence aggregate -> one less Spark
-        # job per superstep (bench/scaling path)
-        def metrics(new: DataFrame) -> dict:
-            return {}
+    def metrics(new: DataFrame) -> dict:
+        r = new.agg(
+            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("res")
+        ).first()
+        return {"residual_l1": float(r["res"] or 0.0)}
 
-        def converged(m: dict) -> bool:
-            return False
-    else:
-        def metrics(new: DataFrame) -> dict:
-            r = new.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("res")
-            ).first()
-            return {"residual_l1": float(r["res"] or 0.0)}
-
-        def converged(m: dict) -> bool:
-            return m["residual_l1"] < tol
-
-    n_blocks = -(-max_iters // steps_per_block)
-    if runner is not None:
-        final = runner.run("pagerank", state, step, metrics, converged, n_blocks)
-    else:
-        final = run_in_memory(state, step, metrics, converged, n_blocks, on_metrics)
+    # tol <= 0 is the fixed-iteration mode: no convergence aggregate -> one
+    # less Spark job per superstep (bench/scaling path)
+    final = iterate(
+        "pagerank", state, step, max_iters,
+        metrics if tol > 0.0 else None, lambda m: m["residual_l1"] < tol,
+        runner, on_metrics,
+    )
     return final.select("id", "rank")
 
 
@@ -181,7 +158,7 @@ def personalized_pagerank(
 
     ``source_ids`` is a list of node ids or a (id) DataFrame (broadcast-joined
     once at init — source sets are small by use-case)."""
-    from kaminpar_spark.plans.superstep import run_in_memory
+    from kaminpar_spark.plans.superstep import iterate
 
     n = graph.num_nodes()
     spark = graph.nodes.sparkSession
@@ -236,16 +213,11 @@ def personalized_pagerank(
         )
 
     def metrics(new: DataFrame) -> dict:
-        if tol <= 0.0:
-            return {}
         r = new.agg(F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("res")).first()
         return {"residual_l1": float(r["res"] or 0.0)}
 
-    def converged(m: dict) -> bool:
-        return bool(m) and m["residual_l1"] < tol
-
-    if runner is not None:
-        final = runner.run("ppr", state, step, metrics, converged, max_iters)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_iters)
+    final = iterate(
+        "ppr", state, step, max_iters,
+        metrics if tol > 0.0 else None, lambda m: m["residual_l1"] < tol, runner,
+    )
     return final.select("id", "rank")

@@ -69,7 +69,7 @@ def distances(
 
     ``sources`` is a list of node ids or an (id) DataFrame (broadcast onto the
     node table at init — source sets are small by use-case)."""
-    from kaminpar_spark.plans.superstep import run_in_memory
+    from kaminpar_spark.plans.superstep import iterate
 
     spark = graph.nodes.sparkSession
     if isinstance(sources, DataFrame):
@@ -96,10 +96,7 @@ def distances(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    if runner is not None:
-        final = runner.run("distances", state, step, metrics, converged, max_hops)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_hops)
+    final = iterate("distances", state, step, max_hops, metrics, converged, runner)
     return final.where(F.col("dist").isNotNull()).select("id", "dist")
 
 
@@ -117,7 +114,7 @@ def multi_source_distances(
     callers keep the source set bounded (sampled centrality estimators).
 
     Same hop-bounded min-relaxation semantics as ``distances``."""
-    from kaminpar_spark.plans.superstep import run_in_memory
+    from kaminpar_spark.plans.superstep import iterate
 
     spark = graph.nodes.sparkSession
     if isinstance(sources, DataFrame):
@@ -163,10 +160,7 @@ def multi_source_distances(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    if runner is not None:
-        final = runner.run("ms_distances", state, step, metrics, converged, max_hops)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_hops)
+    final = iterate("ms_distances", state, step, max_hops, metrics, converged, runner)
     return final.where(F.col("dist").isNotNull()).select("src", "id", "dist")
 
 

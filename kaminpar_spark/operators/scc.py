@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.plans.lineage import release, truncate
-from kaminpar_spark.plans.superstep import run_in_memory
+from kaminpar_spark.plans.superstep import iterate
 
 
 def _min_reach_labels(
@@ -86,7 +86,7 @@ def _min_reach_labels(
         ).first()["mv"]
         return {"moved": int(moved or 0)}
 
-    final = run_in_memory(state, step, metrics, lambda m: m["moved"] == 0, max_iters)
+    final = iterate("min_reach_labels", state, step, max_iters, metrics, lambda m: m["moved"] == 0)
     return final.select("id", "lab")
 
 
@@ -209,19 +209,21 @@ def condensation_levels(edges: DataFrame, max_iters: int = 100) -> DataFrame:
     equi-join + one max groupBy at condensation scale (≪ graph scale)."""
     dag, scc = condensation(edges)
     dag = truncate(dag)
-    cnodes = truncate(scc.select(F.col("scc").alias("id")).distinct())
-    state = truncate(cnodes.select("id", F.lit(0).cast("long").alias("lev")))
-    for _ in range(max_iters):
+    state = scc.select(F.col("scc").alias("id")).distinct().select(
+        "id", F.lit(0).cast("long").alias("lev")
+    )
+
+    def step(s: DataFrame, i: int) -> DataFrame:
         upd = (
             dag.join(
-                state.select(F.col("id").alias("src"), "lev").hint("shuffle_hash"),
+                s.select(F.col("id").alias("src"), "lev").hint("shuffle_hash"),
                 "src",
             )
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("lev") + 1).alias("nlev"))
         )
-        new = truncate(
-            state.select("id", F.col("lev").alias("old_lev"))
+        return (
+            s.select("id", F.col("lev").alias("old_lev"))
             .join(upd.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -231,14 +233,19 @@ def condensation_levels(edges: DataFrame, max_iters: int = 100) -> DataFrame:
                 "old_lev",
             )
         )
+
+    def metrics(new: DataFrame) -> dict:
         moved = new.agg(
             F.sum((F.col("lev") != F.col("old_lev")).cast("int")).alias("m")
         ).first()["m"]
-        release(state)
-        state = new
-        if not moved:
-            break
-    else:
+        return {"moved": moved or 0}
+
+    history: list[dict] = []
+    state = iterate(
+        "condensation_levels", state, step, max_iters, metrics,
+        lambda m: m["moved"] == 0, on_metrics=lambda i, m: history.append(m),
+    )
+    if not history or history[-1]["moved"]:
         raise RuntimeError(
             "condensation_levels: no fixpoint within max_iters — input "
             "edges are not a DAG after condensation (should be impossible)"

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.superstep import iterate
 
 SPECTRAL_SCALE = 1 << 20
 
@@ -74,8 +74,8 @@ def fiedler_scores(
         .cast("long")
         .alias("s"),
     )
-    x = truncate(x)
-    for _ in range(iters):
+
+    def step(x: DataFrame, i: int) -> DataFrame:
         mean = x.agg(_tdiv("sum(s)", n).alias("c"))
         centered = x.crossJoin(F.broadcast(mean)).select(
             "id", (F.col("s") - F.col("c")).alias("s")
@@ -100,19 +100,17 @@ def fiedler_scores(
         m = y.agg(
             F.greatest(F.lit(1), _tdiv(f"max(abs(y))", scale)).alias("m")
         )
-        new_x = truncate(
-            y.crossJoin(F.broadcast(m)).select(
-                "id",
-                (
-                    F.when(F.col("y") < 0, -1).otherwise(1)
-                    * _tdiv("abs(y)", "m")
-                )
-                .cast("long")
-                .alias("s"),
+        return y.crossJoin(F.broadcast(m)).select(
+            "id",
+            (
+                F.when(F.col("y") < 0, -1).otherwise(1)
+                * _tdiv("abs(y)", "m")
             )
+            .cast("long")
+            .alias("s"),
         )
-        release(x)
-        x = new_x
+
+    x = iterate("fiedler_scores", x, step, iters)
     mean = x.agg(_tdiv("sum(s)", n).alias("c"))
     return x.crossJoin(F.broadcast(mean)).select(
         "id", (F.col("s") - F.col("c")).cast("long").alias("fiedler")

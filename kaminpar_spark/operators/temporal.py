@@ -93,12 +93,9 @@ def earliest_arrival(
     def converged(m: dict) -> bool:
         return m["improved"] == 0
 
-    from kaminpar_spark.plans.superstep import run_in_memory
+    from kaminpar_spark.plans.superstep import iterate
 
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(state, step, metrics, converged, rounds)
+    final = iterate(name, state, step, rounds, metrics, converged, runner)
     return final.where(F.col("arr").isNotNull()).select(
         "id", F.col("arr").alias("arrival")
     )

@@ -79,38 +79,27 @@ def wl_refine(
     """(id, wl) after ``rounds`` refinement rounds. Each round is
     materialized so lineage stays flat — the standard superstep contract.
 
-    ``runner`` (plans.superstep.SuperstepRunner) makes every round a durable
-    snapshot with a changed-label metric, resumable mid-iteration; early
-    exit at changed == 0 is parity-safe only in the no-collision limit (a
-    fixpoint partition relabels injectively), so the runner path still runs
-    the full ``rounds`` unless the labels are literally unchanged — which
-    IS the modular fixpoint."""
-    from kaminpar_spark.plans.superstep import run_in_memory
+    Every round reports a changed-label metric; ``runner``
+    (plans.superstep.SuperstepRunner) makes every round a durable snapshot,
+    resumable mid-iteration. The loop exits early only when the labels are
+    literally unchanged — the modular fixpoint, so further rounds would
+    return the identical labels."""
+    from kaminpar_spark.plans.superstep import iterate
 
     def step(s: DataFrame, i: int) -> DataFrame:
         cur = s.select("id", "wl")
-        new = wl_round(graph, cur)
-        if runner is None:
-            return new
         prev = cur.select("id", F.col("wl").alias("p_wl"))
-        return new.join(prev.hint("shuffle_hash"), "id")
+        return wl_round(graph, cur).join(prev.hint("shuffle_hash"), "id")
 
     def metrics(new: DataFrame) -> dict:
-        if runner is None:
-            return {}
         ch = new.agg(
             F.sum((F.col("wl") != F.col("p_wl")).cast("int")).alias("ch")
         ).first()["ch"]
         return {"changed": int(ch or 0)}
 
-    def converged(m: dict) -> bool:
-        return runner is not None and m.get("changed") == 0
-
-    init = wl_init(graph)
-    if runner is not None:
-        final = runner.run(name, init, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(init, step, metrics, converged, rounds)
+    final = iterate(
+        name, wl_init(graph), step, rounds, metrics, lambda m: m["changed"] == 0, runner
+    )
     return final.select("id", "wl")
 
 
@@ -118,13 +107,17 @@ def wl_class_counts(graph: GraphFrame, rounds: int = 2) -> list[int]:
     """Number of distinct structural classes after each round 0..rounds —
     non-decreasing (refinement only splits classes, modulo hash collisions);
     the fixpoint count is the graph's 1-WL color count."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    from kaminpar_spark.plans.lineage import release
+    from kaminpar_spark.plans.superstep import iterate
 
-    state = truncate(wl_init(graph))
-    out = [state.select("wl").distinct().count()]
-    for _ in range(rounds):
-        new_state = truncate(wl_round(graph, state))
-        release(state)
-        state = new_state
-        out.append(state.select("wl").distinct().count())
+    def classes(s: DataFrame) -> int:
+        return s.select("wl").distinct().count()
+
+    init = wl_init(graph)
+    out = [classes(init)]
+    release(iterate(
+        "wl_class_counts", init, lambda s, i: wl_round(graph, s), rounds,
+        lambda s: {"classes": classes(s)},
+        on_metrics=lambda i, m: out.append(m["classes"]),
+    ))
     return out

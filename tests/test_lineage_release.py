@@ -1,8 +1,9 @@
 """Iterative loops must not accumulate checkpoint generations.
 
-Every ad-hoc round loop (outside SuperstepRunner, which diff-releases
-automatically) releases the superseded generation once its successor is
-materialized; otherwise `rounds` copies of O(n) state pile up in the block
+Every round loop releases the superseded generation once its successor is
+materialized — the shared superstep loop (plans.superstep.iterate) does it
+for in-memory and durable runs alike, and the multi-table peel loops do it by
+hand; otherwise `rounds` copies of O(n) state pile up in the block
 manager — unbounded storage growth for to-fixpoint loops (core_numbers
 runs up to 100 rounds), with eviction/GC pressure on long runs. The
 discipline is structural (bounded generations regardless of round count);
@@ -69,6 +70,31 @@ def test_color_to_completion_releases_generations(spark):
     assert e.where(F.col("ca") == F.col("cb")).count() == 0
     after = _n_persistent(spark)
     assert after - before <= 4, f"checkpoint pileup: {before} -> {after}"
+
+
+def test_durable_capped_lp_releases_and_reports_every_superstep(spark, tmp_path):
+    """A runner-backed run is the same loop as an in-memory one: capped LP's
+    per-step staging checkpoints are released, and ``on_metrics`` sees every
+    superstep with the metrics of its manifest line."""
+    from kaminpar_spark import fixtures
+    from kaminpar_spark.operators.labelprop import label_propagation
+    from kaminpar_spark.plans.superstep import SuperstepRunner
+
+    g, _, _ = fixtures.erdos_renyi(spark, n=300, p=0.02, seed=5, hub_overlay=1)
+    g.num_nodes()
+    runner = SuperstepRunner(spark, str(tmp_path))
+    seen = []
+    before = _n_persistent(spark)
+    labels = label_propagation(
+        g, max_iters=6, max_cluster_weight=4, runner=runner,
+        on_metrics=lambda i, m: seen.append((i, m)),
+    )
+    assert labels.count() == 300
+    after = _n_persistent(spark)
+    assert after - before <= 4, f"checkpoint pileup: {before} -> {after}"
+    recs = runner.completed_steps("labelprop")
+    assert recs, "manifest must exist"
+    assert seen == [(r["step"], r["metrics"]) for r in recs]
 
 
 def test_pipeline_results_carry_and_release_staging_blocks(spark):

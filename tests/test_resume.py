@@ -33,9 +33,17 @@ def test_pagerank_resume_bit_identical(spark, tmp_path):
 def test_manifest_metrics_and_lineage(spark, tmp_path):
     g, _, _ = fixtures.erdos_renyi(spark, n=200, p=0.03, seed=9, hub_overlay=1)
     runner = SuperstepRunner(spark, str(tmp_path))
-    connected_components(g, max_iters=20, runner=runner)
+    runs = []
+    for r in (runner, None):  # the same loop, durable and in memory
+        seen = []
+        out = connected_components(
+            g, max_iters=20, runner=r, on_metrics=lambda i, m: seen.append((i, m))
+        )
+        runs.append((sorted(map(tuple, out.collect())), seen))
+    assert runs[0] == runs[1], "in-memory and durable runs diverged"
     recs = runner.completed_steps("connected_components")
     assert recs, "manifest must exist"
+    assert [(rec["step"], rec["metrics"]) for rec in recs] == runs[0][1]
     for rec in recs:
         assert {"step", "rows", "metrics", "wall_sec", "path", "converged"} <= set(rec)
         assert "moved" in rec["metrics"]
@@ -54,12 +62,3 @@ def test_converged_run_short_circuits(spark, tmp_path):
     n_before = len(runner.completed_steps("connected_components"))
     connected_components(g, max_iters=10, runner=runner)
     assert len(runner.completed_steps("connected_components")) == n_before
-
-
-def test_checkpoint_every_k(spark, tmp_path):
-    g, _, _ = fixtures.erdos_renyi(spark, n=200, p=0.03, seed=2, hub_overlay=0)
-    runner = SuperstepRunner(spark, str(tmp_path), checkpoint_every=3)
-    pagerank(g, tol=0.0, max_iters=7, runner=runner)
-    recs = runner.completed_steps("pagerank")
-    durable = [r["step"] for r in recs if r["durable"]]
-    assert 0 in durable and 3 in durable and 6 in durable  # every 3rd + last

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -52,6 +53,22 @@ def test_core_numbers_star_hub(spark):
     assert cores[hub] == 3  # hub sits in the clique's 3-core
     assert all(cores[i] == 1 for i in range(0, n_leaves, 9973))  # leaf sample
     assert cores[hub + 1] == cores[hub + 2] == cores[hub + 3] == 3
+
+
+def test_core_numbers_warns_when_not_converged(spark, caplog):
+    """A path needs two h-index rounds (its inner nodes drop from degree 2 to
+    core 1), so a one-round budget ends before the fixpoint and must say so;
+    the default budget converges silently to the exact cores."""
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
+    g = GraphFrame.from_edge_pairs(edges)
+    with caplog.at_level(logging.WARNING, logger="kaminpar_spark.operators.kcore"):
+        core_numbers(g, max_rounds=1).collect()
+    assert "NOT converged within max_rounds" in caplog.text
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="kaminpar_spark.operators.kcore"):
+        cores = {r["id"]: r["core"] for r in core_numbers(g).collect()}
+    assert cores == {0: 1, 1: 1, 2: 1, 3: 1}
+    assert "NOT converged" not in caplog.text
 
 
 @pytest.mark.slow
