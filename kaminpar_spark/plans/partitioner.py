@@ -175,7 +175,6 @@ class Partitioner:
         cluster_weight_limit: str = "epsilon-block-weight",
         cluster_weight_multiplier: float = 1.0,
         ip_replications: int = 3,
-        ip_replication_threads: int = 2,
         coarsener: str = "lp",
     ):
         """``scheme='deep'`` (default) mirrors the reference's deep multilevel
@@ -199,18 +198,11 @@ class Partitioner:
           "one", "zero"} x ``cluster_weight_multiplier`` — the rule for the
           soft cluster cap during coarsening (--c-cluster-weight-limit;
           "zero" disables the cap like the reference's ZERO).
-        - ``ip_replications``: deep-IP replication (E9,
+        - ``ip_replications``: deep-IP replication, the driver analog of the
+          reference's replicated initial partitioning (E9,
           parallel_initial_partitioner.cc:11-69): run the coarsest-graph
-          bisection portfolio R times with distinct seeds, keep the best by
-          (feasible, cut).
-        - ``ip_replication_threads``: thread budget for the split-and-join
-          replica TREE inside each portfolio member (replicated_bipartition;
-          copies rule helper.cc:211-227) — replicas fork MID-coarsening and
-          the best bisection wins at each join. 1 disables the tree (single
-          sequential chain per bisection); the coarsest graph is
-          driver-sized, so the default 2 costs at most ~2x the sequential
-          initial partition and buys back quality variance on unlucky
-          clusterings."""
+          recursive bisection R times with distinct seeds and keep the best
+          by (feasible, cut)."""
         self.graph = graph
         self.spark = spark or SparkSession.getActiveSession()
         self.contraction_limit = contraction_limit
@@ -234,7 +226,6 @@ class Partitioner:
         assert coarsener in ("lp", "hem")
         self.coarsener = coarsener
         self.ip_replications = max(1, ip_replications)
-        self.ip_replication_threads = max(1, ip_replication_threads)
 
     def _cluster_cap(self, epsilon: float, total_w: int, n: int, k: int) -> int | None:
         if self.cluster_weight_limit == "zero":
@@ -365,7 +356,6 @@ class Partitioner:
             sg, k0, epsilon,
             seeds=[self.seed + 7919 * r for r in range(self.ip_replications)],
             k_final=k, total_weight_root=total_w, final_k=k,
-            replication_threads=self.ip_replication_threads,
         )
         part = self.spark.createDataFrame(
             [(int(i), int(b)) for i, b in zip(ids, labels)], "id long, block int"

@@ -124,3 +124,27 @@ def test_cli_vcut_onion_sample_reorder(spark, tmp_path, capsys):
     assert cli.main(["reorder", "-G", str(edges), "--max-iters", "6"]) == 0
     out = capsys.readouterr().out
     assert out.count("RESULT ordering=") == 3, out
+
+
+def test_cli_partition(spark, tmp_path, capsys):
+    """CLI round-trip for the partition subcommand: n below twice the
+    contraction limit, so the whole graph goes straight to the driver-side
+    initial partitioner; --save writes one block in [0, k) per node."""
+    from kaminpar_spark import cli, fixtures
+
+    edges = tmp_path / "er_edges.parquet"
+    g, _, _ = fixtures.erdos_renyi(spark, n=120, p=0.06, seed=3, hub_overlay=0)
+    g.edges.select("src", "dst", "weight").write.parquet(str(edges))
+    saved = tmp_path / "partition.parquet"
+
+    assert cli.main([
+        "partition", "-G", str(edges), "-k", "4", "--epsilon", "0.03",
+        "--contraction-limit", "100", "--save", str(saved),
+    ]) == 0
+    out = capsys.readouterr().out
+    assert "RESULT cut=" in out, out
+
+    ids = {r["src"] for r in spark.read.parquet(str(edges)).select("src").distinct().collect()}
+    rows = spark.read.parquet(str(saved)).collect()
+    assert sorted(r["id"] for r in rows) == sorted(ids)
+    assert all(0 <= r["block"] < 4 for r in rows)
